@@ -12,6 +12,9 @@ Layout
 ------
 - ``session``    SparkSession factory with scale-oriented defaults (AQE, etc.)
 - ``schemas``    explicit StructTypes (PaySim transactions, fixture tables)
+- ``frames``     ``local_frame``: driver-side rows as a JVM local relation
+                 (Arrow, ``LocalTableScan``) — the one way to build a frame
+                 from Python rows
 - ``sources``    readers (CSV FAILFAST/PERMISSIVE, parquet incl. ns-timestamps)
                  and sinks (JDBC append w/ typed DDL, staging-table atomicity)
 - ``pipeline``   the reference-parity fraud ETL dataflow (filters + counts)

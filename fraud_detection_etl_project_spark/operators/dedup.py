@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_etl_project_spark.frames import local_frame
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.functions.text import fingerprint, normalized
 
@@ -1223,7 +1224,8 @@ def foreach_batch_dedup_ingester(
                 # same batch-id idempotency as the data commits, so a
                 # replay doesn't double-log
                 n_arrived = raw.count() if pre_filter is not None else n_in
-                m = spark.createDataFrame(
+                m = local_frame(
+                    spark,
                     [(int(bid), n_arrived, n_arrived - n_in, n_in - n_kept, n_kept)],
                     "batch_id long, n_arrived long, n_rejected long, n_dup long, n_kept long",
                 )

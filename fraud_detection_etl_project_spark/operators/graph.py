@@ -27,6 +27,12 @@ Scale design (the part that matters at 100 TB):
   checkpoint already materializes — no separate changed-set action per
   iteration.
 
+- **Driver-side results re-enter the plan as local relations.** Every
+  small-graph path (union-find labels, local power iterations) hands its
+  rows back through ``frames.local_frame``: one Arrow table, planned as
+  ``LocalTableScan`` with exact statistics, no Python workers at action
+  time.
+
 Determinism: min-label is order-free (min is commutative/associative), so
 results are bit-stable across partitionings and engines — the DuckDB
 oracle (plans/llm_queries.py) reproduces the exact component assignment
@@ -38,16 +44,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from fraud_detection_etl_project_spark.frames import local_frame
+
 
 _LOCAL_NODE_CAP = 2_000_000  # driver-path NODE ceiling: the edge probe
 # alone does not bound the node frame (a near-empty interaction graph over
 # a corpus-scale mostly-isolated node set has few edges but 10^8+ nodes).
 # The functions that COLLECT the node frame — pagerank,
 # personalized_pagerank, katz_centrality — gate their local path on BOTH
-# counts. connected_components' local path deliberately gates on edges
-# only: _local_components never collects the node side (isolated nodes
-# stay distributed and union in as singletons), so adding a node collect
-# there would need this cap wired in first.
+# counts, through _small_graph. connected_components' local path
+# deliberately gates on edges only: _local_components never collects the
+# node side (isolated nodes stay distributed and union in as singletons),
+# so adding a node collect there would need this cap wired in first.
 
 
 def connected_components(
@@ -182,33 +190,55 @@ def connected_components(
     )
 
 
+def _small_graph(nodes: DataFrame, edges: DataFrame, local_edge_threshold: int):
+    """``(edge_rows, node_rows)`` when the graph fits the driver path — at
+    most ``local_edge_threshold`` edges and ``_LOCAL_NODE_CAP`` nodes —
+    else ``None``. One bounded collect per side, edges first: a graph over
+    either bound is left to the distributed loop, and a small graph pays
+    for its edge build exactly once (no separate count action)."""
+    edge_rows = edges.limit(local_edge_threshold + 1).collect()
+    if len(edge_rows) > local_edge_threshold:
+        return None
+    node_rows = nodes.limit(_LOCAL_NODE_CAP + 1).collect()
+    if len(node_rows) > _LOCAL_NODE_CAP:
+        return None
+    return edge_rows, node_rows
+
+
+def _score_frame(nodes: DataFrame, scores: dict, col: str) -> DataFrame:
+    """(node, ``col``) from a driver-side {node: score} map, as a local
+    relation (frames.local_frame): exact statistics, no Python workers."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType(
+        [StructField("node", nodes.schema["node"].dataType), StructField(col, DoubleType())]
+    )
+    return local_frame(nodes.sparkSession, sorted(scores.items()), schema)
+
+
 def _local_pagerank(
     nodes: DataFrame,
     edge_rows_in,
+    node_rows,
     iterations: int,
     damping: float,
     scale: float,
-    n: int,
     base: float,
 ) -> DataFrame:
     """Driver-side power iteration over a collected (small, pre-aggregated)
-    edge list — the exact recurrence of the distributed loop: quantized
+    graph — the exact recurrence of the distributed loop: quantized
     contributions summed in exact ints, rank re-quantized per iteration.
     Python floats are IEEE doubles, so results are bit-identical."""
     import math
     from collections import defaultdict
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     edge_rows = [(r["src"], r["dst"], r["weight"]) for r in edge_rows_in]
-    # bounded: callers gate on BOTH the local_edge_threshold edge probe
-    # and n <= _LOCAL_NODE_CAP (isolated nodes are not bounded by edges)
-    node_list = [r["node"] for r in nodes.collect()]
+    node_list = [r["node"] for r in node_rows]
     out_w: dict = defaultdict(int)
     for s, _, w in edge_rows:
         out_w[s] += w
     p = [(s, d, w / out_w[s]) for s, d, w in edge_rows]
-    r = {x: 1.0 / n for x in node_list}
+    r = {x: 1.0 / len(node_rows) for x in node_list}
     for _ in range(iterations):
         contrib: dict = defaultdict(int)
         for s, d, pv in p:
@@ -220,11 +250,7 @@ def _local_pagerank(
             else math.floor((base + damping * 0.0) * scale + 0.5) / scale
             for x in node_list
         }
-    id_type = nodes.schema["node"].dataType
-    return nodes.sparkSession.createDataFrame(
-        sorted(r.items()),
-        StructType([StructField("node", id_type), StructField("r", DoubleType())]),
-    )
+    return _score_frame(nodes, r, "r")
 
 
 def _local_components(nodes: DataFrame, sym: DataFrame, node_col: str) -> DataFrame:
@@ -274,14 +300,7 @@ def _local_components(nodes: DataFrame, sym: DataFrame, node_col: str) -> DataFr
     id_type = sym.schema["a"].dataType
     labeled = sorted((x, find(x)) for x in seen)
     schema = StructType([StructField("node", id_type), StructField("comp", id_type)])
-    try:
-        import pandas as pd
-
-        label_df = sym.sparkSession.createDataFrame(
-            pd.DataFrame(labeled, columns=["node", "comp"]), schema
-        )
-    except Exception:
-        label_df = sym.sparkSession.createDataFrame(labeled, schema)
+    label_df = local_frame(sym.sparkSession, labeled, schema)
     return nodes.select(F.col(node_col).alias("node")).join(label_df, "node", "left").select(
         F.col("node"), F.coalesce(F.col("comp"), F.col("node")).alias("comp")
     )
@@ -321,11 +340,14 @@ def pagerank(
     cadence as connected_components; at a handful of iterations plan
     growth is harmless. Dangling-node mass (nodes with no out-edges) is
     dropped rather than redistributed — documented deviation, fine for
-    relative ranking. ``nodes.count()`` is one scalar action (the N in
-    the teleport term — a parameter, not data)."""
+    relative ranking. The N in the teleport term (a parameter, not data)
+    is the length of the node rows the local path collects anyway; only
+    the distributed path pays one scalar ``nodes.count()`` action for it.
+
+    The local path returns its ranks as a local relation
+    (frames.local_frame): ``LocalTableScan`` with exact statistics, so
+    the query that joins them runs no Python workers."""
     scale = float(10**quant)
-    n = nodes.count()
-    base = (1.0 - damping) / n
 
     # Adaptive execution, same rationale as connected_components: ranks
     # and transitions are graph-sized, not corpus-sized. When the
@@ -335,11 +357,11 @@ def pagerank(
     # sums — Python and the JVM agree bit-for-bit) skips all
     # per-iteration job scheduling. Above the threshold the distributed
     # loop runs — the only option for web-scale graphs.
-    # one-pass probe: collect up to threshold+1 edges; a small graph pays
-    # for its edge build exactly once (no separate count action)
-    probe = edges.limit(local_edge_threshold + 1).collect()
-    if len(probe) <= local_edge_threshold and n <= _LOCAL_NODE_CAP:
-        return _local_pagerank(nodes, probe, iterations, damping, scale, n, base)
+    small = _small_graph(nodes, edges, local_edge_threshold)
+    n = len(small[1]) if small else nodes.count()
+    base = (1.0 - damping) / n
+    if small:
+        return _local_pagerank(nodes, *small, iterations, damping, scale, base)
 
     # persist the transition matrix: every iteration references it, and
     # without the persist the (possibly expensive) edge-build lineage is
@@ -400,26 +422,18 @@ def personalized_pagerank(
     Scale: identical shuffle shape to pagerank — transition matrix built
     once, each iteration one src-keyed join + one dst-keyed grouped sum
     over the EDGE list; the adaptive local path handles aggregated graphs
-    that fit on the driver with the same bit-exact recurrence."""
+    that fit on the driver with the same bit-exact recurrence and returns
+    a local relation."""
     import math
     from collections import defaultdict
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     scale = float(10**quant)
     sset = set(seeds)
     e_w = 1.0 / len(sset)
-    probe = edges.limit(local_edge_threshold + 1).collect()
-    # bounded: node probe capped at _LOCAL_NODE_CAP + 1 rows; an
-    # over-cap node set falls through to the distributed loop
-    nprobe = (
-        nodes.limit(_LOCAL_NODE_CAP + 1).collect()
-        if len(probe) <= local_edge_threshold
-        else None
-    )
-    if nprobe is not None and len(nprobe) <= _LOCAL_NODE_CAP:
-        edge_rows = [(r["src"], r["dst"], r["weight"]) for r in probe]
-        node_list = [r["node"] for r in nprobe]
+    small = _small_graph(nodes, edges, local_edge_threshold)
+    if small:
+        edge_rows = [(r["src"], r["dst"], r["weight"]) for r in small[0]]
+        node_list = [r["node"] for r in small[1]]
         out_w: dict = defaultdict(int)
         for s, _, w in edge_rows:
             out_w[s] += w
@@ -442,11 +456,7 @@ def personalized_pagerank(
                 / scale
                 for x in node_list
             }
-        id_type = nodes.schema["node"].dataType
-        return nodes.sparkSession.createDataFrame(
-            sorted(r.items()),
-            StructType([StructField("node", id_type), StructField("r", DoubleType())]),
-        )
+        return _score_frame(nodes, r, "r")
 
     outsum = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     p_df = (
@@ -622,25 +632,17 @@ def katz_centrality(
     Scale: same shuffle shape as pagerank — one src-keyed join + one
     dst-keyed grouped sum per iteration over the (aggregated) edge list,
     with the probe-bounded local path for graphs small enough to fold on
-    the driver (identical recurrence, bit-identical result).
+    the driver (identical recurrence, bit-identical result, returned as a
+    local relation).
     """
     import math
     from collections import defaultdict
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     scale = float(10**quant)
-    probe = edges.limit(local_edge_threshold + 1).collect()
-    # bounded: node probe capped at _LOCAL_NODE_CAP + 1 rows; over-cap
-    # node sets take the distributed loop
-    nprobe = (
-        nodes.limit(_LOCAL_NODE_CAP + 1).collect()
-        if len(probe) <= local_edge_threshold
-        else None
-    )
-    if nprobe is not None and len(nprobe) <= _LOCAL_NODE_CAP:
-        edge_rows = [(r["src"], r["dst"]) for r in probe]
-        node_list = [r["node"] for r in nprobe]
+    small = _small_graph(nodes, edges, local_edge_threshold)
+    if small:
+        edge_rows = [(r["src"], r["dst"]) for r in small[0]]
+        node_list = [r["node"] for r in small[1]]
         x = {v: 1.0 for v in node_list}
         for _ in range(iterations):
             acc: dict = defaultdict(int)
@@ -651,11 +653,7 @@ def katz_centrality(
                 v: math.floor((1.0 + alpha * (acc.get(v, 0) / scale)) * scale + 0.5) / scale
                 for v in node_list
             }
-        id_type = nodes.schema["node"].dataType
-        return nodes.sparkSession.createDataFrame(
-            sorted(x.items()),
-            StructType([StructField("node", id_type), StructField("katz", DoubleType())]),
-        )
+        return _score_frame(nodes, x, "katz")
 
     e = edges.select("src", "dst").persist()
     x_df = nodes.select("node", F.lit(1.0).alias("katz"))

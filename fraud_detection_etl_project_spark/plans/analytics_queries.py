@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_etl_project_spark.frames import local_frame
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.functions.text import tokens
 from fraud_detection_etl_project_spark.plans.llm_queries import TOKS_SQL
@@ -1469,7 +1470,8 @@ def mmr_diversified_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
                 best = (key, v, score)
         chosen.append(best[1])
         selected.append((rank, best[1], best[2]))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, v, s / 10_000.0) for r, v, s in selected],
         schema="rank int, vec_id bigint, mmr_score double",
     )
@@ -3513,9 +3515,9 @@ def purchase_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("v_q"),
     )
-    cp = spark.createDataFrame(_shap_pairs(), "ch int, m0 int, m1 int, w int")
-    nm = spark.createDataFrame(
-        [(c, i) for i, c in enumerate(_SHAP_CHANNELS)], "channel string, ch int"
+    cp = local_frame(spark, _shap_pairs(), "ch int, m0 int, m1 int, w int")
+    nm = local_frame(
+        spark, [(c, i) for i, c in enumerate(_SHAP_CHANNELS)], "channel string, ch int"
     )
     g0 = g.select(F.col("mask").alias("m0"), F.col("v_q").alias("v0"))
     g1 = g.select(F.col("mask").alias("m1"), F.col("v_q").alias("v1"))

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_etl_project_spark.frames import local_frame
 from fraud_detection_etl_project_spark.functions.rounding import cents_sum, cents_sum_sql, fxr
 from fraud_detection_etl_project_spark.functions.vectors import cosine
 from fraud_detection_etl_project_spark.operators import similarity as S
@@ -1027,9 +1028,19 @@ def partitioned_dpp_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(path)
     fact = spark.read.parquet(path)
-    dim = spark.createDataFrame(
-        [("O", "open"), ("F", "finished"), ("P", "pending")], "st string, label string"
-    ).filter(F.col("label") == "finished")
+    # the dimension is a staged table too: over a driver-side local
+    # relation the optimizer would fold the label filter into the rows at
+    # plan time, and with no filter left on the dim side DPP does not fire
+    dim_rows = [("O", "open"), ("F", "finished"), ("P", "pending")]
+    dim_path = os.path.join(
+        tempfile.gettempdir(),
+        f"orderstatus_dim_{hashlib.md5(repr(dim_rows).encode()).hexdigest()[:12]}",
+    )
+    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
+        local_frame(spark, dim_rows, "st string, label string").write.mode(
+            "overwrite"
+        ).parquet(dim_path)
+    dim = spark.read.parquet(dim_path).filter(F.col("label") == "finished")
     return (
         fact.join(F.broadcast(dim), fact.o_orderstatus == dim.st)
         .groupBy(F.col("o_orderstatus"))
@@ -4621,7 +4632,8 @@ def fellegi_sunter_em_params(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["g1"]), int(r["g2"]), int(r["g3"])): int(r["n_k"]) for r in cnt.collect()
     }
     p, m, u, n_total = _em_py(counts)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_total, p, m[0], m[1], m[2], u[0], u[1], u[2])],
         "n_pairs bigint, em_p double, m1 double, m2 double, m3 double, "
         "u1 double, u2 double, u3 double",

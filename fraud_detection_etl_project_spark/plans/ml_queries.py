@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_etl_project_spark.frames import local_frame
 from fraud_detection_etl_project_spark.functions import ols
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.functions.text import normalized
@@ -576,10 +577,15 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             # np.add.at: exact accumulation even if a batch ever carried
             # duplicate cell ids (groupBy guarantees unique, belt+braces)
             np.add.at(mat, pos, val.astype(np.int64))
-        if not mat.any():
-            # empty or all-zero embeddings table: the r10 join-based plan
+        S = mat.reshape(_PCA_D, _PCA_D)
+        v1 = S.sum(axis=1, dtype=np.int64)
+        m1 = np.abs(v1).max()
+        if m1 == 0:
+            # empty or all-zero embeddings table (S == 0), or a nonzero S
+            # whose row sums cancel (one embedding (1, -1, 0, ...)): the
+            # first power step has no direction. The r10 join-based plan
             # returned an EMPTY frame here (no cells survive); emit the
-            # same instead of dividing by m1=0 (ADVICE r11)
+            # same instead of dividing by m1=0 into NaN/inf pc1.
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([], type=pa.int64()),
@@ -589,9 +595,6 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["dim", "second_moment", "pc1"],
             )
             return
-        S = mat.reshape(_PCA_D, _PCA_D)
-        v1 = S.sum(axis=1, dtype=np.int64)
-        m1 = np.abs(v1).max()
         vq = np.floor((1e6 * v1.astype(np.float64)) / m1 + 0.5).astype(np.int64)
         v2 = (np.floor(S / _PCA_DOWN).astype(np.int64) @ vq).astype(np.int64)
         m2 = np.abs(v2).max()
@@ -1581,7 +1584,8 @@ def perceptron_purchase_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(final_margin > 0, 1)).cast("bigint").alias("n_correct"),
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
     )
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [tuple(w2) + (miss1, miss2)],
         "w0 bigint, w1 bigint, w2 bigint, w3 bigint, miss_epoch1 bigint, miss_epoch2 bigint",
     )
@@ -2658,7 +2662,8 @@ def kcenter_greedy_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     known lower bound for exact greedy (approximate variants subsample
     candidates per round with the same plumbing)."""
     q, centers = _kc_select(spark, sf_dir)
-    cent = spark.createDataFrame(
+    cent = local_frame(
+        spark,
         [(cid, rr, cv) for cid, rr, cv in centers],
         "cid bigint, sel_round bigint, cv array<bigint>",
     )
@@ -2926,7 +2931,7 @@ def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for cid in sorted(codebook)
     ]
-    shifts = spark.createDataFrame(shift_rows, "cluster_id bigint, shift_sq bigint")
+    shifts = local_frame(spark, shift_rows, "cluster_id bigint, shift_sq bigint")
     return (
         stats.withColumnRenamed("cid", "cluster_id")
         .join(F.broadcast(shifts), "cluster_id")
@@ -3301,7 +3306,7 @@ def kmeans_parallel_oversample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", F.col("d2").cast("bigint").alias("sq_dist"))
     )
-    seed_row = spark.createDataFrame([(int(seed["vec_id"]), 0)], "vec_id bigint, sq_dist bigint")
+    seed_row = local_frame(spark, [(int(seed["vec_id"]), 0)], "vec_id bigint, sq_dist bigint")
     return sel.unionAll(seed_row)
 
 
@@ -3379,7 +3384,7 @@ def _kth_smallest_histogram(resid: DataFrame, val_col: str, tie_col: str) -> Dat
     if n == 0:
         # empty calibration: no rank exists — an empty qhat frame (the
         # oracle's qhat CTE is empty too, so downstream joins agree)
-        return spark.createDataFrame([], "q bigint")
+        return local_frame(spark, [], "q bigint")
     k = ((n + 1) * 9 + 9) // 10
     lo, hi = int(head["lo"]), int(head["hi"])
     current = resid
@@ -3387,7 +3392,7 @@ def _kth_smallest_histogram(resid: DataFrame, val_col: str, tie_col: str) -> Dat
     # so the range is never exhausted for long-typed values.
     for _level in range(8):
         if lo == hi:
-            return spark.createDataFrame([(lo,)], "q bigint")
+            return local_frame(spark, [(lo,)], "q bigint")
         width = _derive_width(lo, hi)
         hb = (F.col(val_col) / F.lit(width)).cast("long")
         cells = sorted(
@@ -3408,7 +3413,7 @@ def _kth_smallest_histogram(resid: DataFrame, val_col: str, tie_col: str) -> Dat
             k_in = k - before
             if bmin == bmax:
                 # every row in the cell ties: the k-th smallest IS bmin
-                return spark.createDataFrame([(int(bmin),)], "q bigint")
+                return local_frame(spark, [(int(bmin),)], "q bigint")
             in_bucket = current.filter(hb == F.lit(int(h)))
             if k_in <= _CF_TAKE_BOUND:
                 return (
@@ -3906,8 +3911,8 @@ def pq_adc_ann_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
             qsv = qv[s * _PQ_SUB : (s + 1) * _PQ_SUB]
             cents.append((s, c, cv))
             dq.append((s, c, sum((a - b) * (a - b) for a, b in zip(qsv, cv))))
-    cent_df = spark.createDataFrame(cents, "s int, c int, cv array<bigint>")
-    dq_df = spark.createDataFrame(dq, "s int, c int, d bigint")
+    cent_df = local_frame(spark, cents, "s int, c int, cv array<bigint>")
+    dq_df = local_frame(spark, dq, "s int, c int, d bigint")
 
     sub = q.select(
         "vec_id",
@@ -4117,7 +4122,7 @@ def event_isolation_forest_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not level:
             break
         splits.extend(level)
-        sp_df = spark.createDataFrame(level, "tree int, node bigint, dim int, thresh bigint")
+        sp_df = local_frame(spark, level, "tree int, node bigint, dim int, thresh bigint")
         bit = F.when(
             F.when(F.col("dim") == 0, F.col("f0")).otherwise(F.col("f1")) > F.col("thresh"), 1
         ).otherwise(0)
@@ -4136,7 +4141,7 @@ def event_isolation_forest_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = nxt
     cur.unpersist()
 
-    allsp = spark.createDataFrame(splits, "tree int, node bigint, dim int, thresh bigint")
+    allsp = local_frame(spark, splits, "tree int, node bigint, dim int, thresh bigint")
     sc = with_tree.withColumn("node", F.lit(1).cast("long")).withColumn(
         "depth", F.lit(0).cast("long")
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_etl_project_spark.frames import local_frame
 from fraud_detection_etl_project_spark.operators.relational import (
     asof_join,
     range_join,
@@ -655,7 +656,8 @@ GROUP BY b.band
 def event_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range/band join (§2.3) against a broadcast interval dimension."""
     e = _t(spark, sf_dir, "events").select("value")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 50.0), ("mid", 50.0, 150.0), ("high", 150.0, 300.0), ("extreme", 300.0, 1e9)],
         "band string, lo double, hi double",
     )

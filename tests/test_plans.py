@@ -824,3 +824,44 @@ def test_bench_query_plan_invariants(spark, name):
             f"frame is reduced (bounded by a domain), allow-list it in "
             f"_GLOBAL_WINDOW_OK with the frame cited"
         )
+
+
+# ---------------------------------------------------------------------------
+# Driver-side results re-enter the plan as local relations
+# (frames.local_frame), never as a pickled Python RDD.
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "nation_trade_pagerank",  # local power-iteration ranks
+        "threshold_sweep_pr_metrics",  # threshold literal frame
+        "purchase_shapley_attribution",  # coalition-pair and channel frames
+    ],
+)
+def test_local_results_plan_as_local_table_scan(spark, name):
+    plan = plan_of(spark, name)
+    assert "Scan ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+
+
+def test_pagerank_builder_job_budget(spark):
+    """The small-graph probe collects the edge side, then the node side
+    once; the node count comes from the collected rows, so the builder
+    runs no separate ``nodes.count()`` job. 6 jobs at sf0.001 (8 before:
+    a count action plus a second node collect)."""
+    sc = spark.sparkContext
+    group = "test_pagerank_builder_job_budget"
+    sc.setJobGroup(group, "nation_trade_pagerank build")
+    try:
+        REGISTRY["nation_trade_pagerank"].fn(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 6, f"builder submitted {len(jobs)} jobs"
+
+
+def test_get_spark_turns_dataframe_debugging_off(spark):
+    """Call-site capture costs about six py4j round trips per ``F.*``
+    call while a plan is built; the engine session turns it off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -160,3 +160,23 @@ def test_ols_fit_degenerate_brand(spark, tmp_path):
     by = sdf.set_index("brand")
     assert by.loc["CONST"][["slope_cents", "intercept_cents", "r2"]].isna().all()
     assert by.loc["VARY", "slope_cents"] == 500.0  # 5 cents/unit exact line
+
+
+def test_embedding_pca_power_cancelling_row_sums(spark, tmp_path):
+    """One embedding (1, -1, 0, ...): its moment matrix S is nonzero but
+    every row sum of S cancels, so the first power step's normalizer m1 is
+    0. The query must emit its empty frame (as for an all-zero table), not
+    divide by zero into NaN/inf pc1."""
+    emb = [1.0, -1.0] + [0.0] * 62
+    tbl = pa.table(
+        {
+            "vec_id": pa.array([1], pa.int64()),
+            "embedding": pa.array([emb], pa.list_(pa.float32())),
+            "label": pa.array([0], pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    from fraud_detection_etl_project_spark.plans import REGISTRY
+
+    rows = REGISTRY["embedding_pca_power"].fn(spark, str(tmp_path)).collect()
+    assert rows == []

@@ -6,6 +6,14 @@ values (sorted columns, sorted rows; floats must match to 1e-9 after the
 queries' own rounding). Exit code 1 on any mismatch.
 
 Usage: python tools/check_queries.py [sf_dir] [query ...]
+
+The queries that read the reference repository's sample CSV
+(``plans.relational_queries.REFERENCE_SAMPLE_CSV``) need that checkout. On a
+box without it, ``CHECK_REFERENCE_CSV=<path to a PaySim-format CSV>`` points
+both engines of those queries at another file of the same format (for
+example one written by ``tools/gen_paysim.py``); the witness then records
+that file's name, size in rows and sha256, so a substituted run is never
+mistaken for one on the reference's own sample.
 """
 
 from __future__ import annotations
@@ -95,13 +103,44 @@ def frames_match(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
     return None
 
 
+def use_reference_csv(path: str, oracles: dict[str, str]) -> dict:
+    """Point the reference-sample queries at ``path``: the module constant
+    their Spark builders read at call time, and the oracle SQL text in
+    ``oracles`` (this run's copy; the registry's strings, which the source
+    hash covers, stay as they are). Returns the witness record of the
+    file used."""
+    import hashlib
+    import os
+
+    from fraud_detection_etl_project_spark.plans import extended_queries, relational_queries
+
+    default = relational_queries.REFERENCE_SAMPLE_CSV
+    relational_queries.REFERENCE_SAMPLE_CSV = path
+    extended_queries.REFERENCE_SAMPLE_CSV = path
+    for name, sql in oracles.items():
+        oracles[name] = sql.replace(default, path)
+    with open(path, "rb") as f:
+        data = f.read()
+    return {
+        "substituted_for": default,
+        "file": os.path.basename(path),
+        "rows": data.count(b"\n") - 1,
+        "sha256": hashlib.sha256(data).hexdigest(),
+    }
+
+
 def main() -> int:
+    import os
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark(app_name="check-queries")
     con = duck_con(sf_dir)
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
+    reference_csv = None
+    if os.environ.get("CHECK_REFERENCE_CSV"):
+        reference_csv = use_reference_csv(os.environ["CHECK_REFERENCE_CSV"], oracles)
 
     failures, passed, rows_only = [], 0, 0
     for name, fn in qs.items():
@@ -142,10 +181,10 @@ def main() -> int:
     if not only:
         import datetime
         import json
-        import os
 
         artifact = {
             "sf_dir": sf_dir,
+            "reference_csv": reference_csv,
             "source_hash": source_tree_hash(),
             "run_utc": datetime.datetime.now(datetime.timezone.utc).isoformat(timespec="seconds"),
             "total_registered": len(qs),
